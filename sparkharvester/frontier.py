@@ -10,11 +10,12 @@ over DataFrames, with
  - blacklist + robots predicates BEFORE the fetch stage — the plan is
    authored filter→fetch because Catalyst will not reorder around an
    opaque pandas UDF (SURVEY.md §4.1);
- - a vectorized mapInPandas fetch stage (synthetic, deterministic) with
-   salted host-hash repartitioning so hot hosts spread across tasks
-   (north rule);
- - link extraction as vectorized pandas/Arrow UDFs (urljoin + exact
-   urllib canonicalization), then explode → filters → distinct;
+ - ONE vectorized mapInPandas stage that fetches (synthetic,
+   deterministic) and extracts each ok page's distinct canonical links
+   (urljoin + exact urllib canonicalization, urlnorm.extract_links) in
+   the same Python pass, with salted host-hash repartitioning so hot
+   hosts spread across tasks (north rule); the next frontier explodes
+   the popped pages' link arrays;
  - global content dedup via a window over content_hash in canonical
    (canon_url, seed_id) order (crawler.py:184-191, normalized per
    SURVEY.md §7.4.1);
@@ -33,7 +34,8 @@ Scale design (10^10-URL frontier, 1000 executors):
    this truncates logical-plan lineage (iterative DataFrame loops
    otherwise grow the plan unboundedly) and doubles as the checkpoint;
  - the only big shuffles per round are the seen anti-join (bloom-
-   prefiltered, keys uniform by construction) and the link distinct;
+   prefiltered, keys uniform by construction) and the next-frontier
+   distinct;
    the dedup/cap windows partition by content_hash / seed_id;
  - AQE handles residual skew; the salt column defuses hot hosts at the
    fetch stage where ordering doesn't matter.
@@ -67,18 +69,19 @@ from .seen import (
 )
 from .seq import attach_global_seq, attach_grouped_prefix
 from .storage import SnapshotStore
-from .synth import FETCH_SCHEMA, SynthConfig, make_fetch_stage
+from .synth import SynthConfig, make_fetch_stage
 from .urlnorm import (
     base_domain,
     canonicalize_one,
-    canonicalize_udf,
+    extract_links,
     is_blacklisted,
-    is_junk_href,
-    is_valid_onion,
     url_hash64,
     url_path,
-    urljoin_udf,
 )
+# not used by the crawl since link extraction moved into the fetch
+# stage; kept importable here because perfbench's traced run wraps
+# these names on this module to count Arrow UDF rows
+from .urlnorm import canonicalize_udf, urljoin_udf  # noqa: F401
 
 
 @dataclass
@@ -181,11 +184,74 @@ def _empty_frontier(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], FRONTIER_SCHEMA)
 
 
-def admit_per_host(
-    cand: DataFrame, tokens: int, buckets: int,
-) -> tuple[DataFrame, DataFrame]:
-    """Per-host politeness admission: keep the first *tokens* rows per
-    host in canonical ``(canon_url, seed_id)`` order; defer the rest.
+# the fetch + link-extraction stage's output: FETCH_SCHEMA with the raw
+# hrefs replaced by the page's distinct canonical links
+FETCHED_SCHEMA = (
+    "canon_url string, seed_id int, depth int, retry_no int, ok boolean, "
+    "attempts int, title string, text string, latency double, "
+    "fetch_partition int, blacklisted boolean, links array<string>, "
+    "links_found int"
+)
+_FETCH_INPUT = ["canon_url", "seed_id", "depth", "retry_no"]
+
+
+def _make_fetch_extract(fetch):
+    """mapInPandas over the gated candidates: ONE Python pass per row.
+
+    Blacklisted rows come out as skipped rows without being fetched
+    (crawler.py:167-171: the blacklist is checked before paying for
+    the fetch).  The rest go through *fetch* (a
+    ``make_fetch_stage`` function), and each ok page's hrefs become its
+    distinct canonical links (``urlnorm.extract_links``) in the same
+    pass, so the links never cross back to the JVM as raw hrefs.
+    """
+    import pandas as pd
+
+    def run(batches):
+        for pdf in batches:
+            bl = pdf["blacklisted"].to_numpy(dtype=bool)
+            parts = []
+            if not bl.all():
+                for out in fetch(iter([pdf.loc[~bl, _FETCH_INPUT]])):
+                    out["links"] = [
+                        extract_links(u, h) if ok else []
+                        for u, h, ok in zip(out["canon_url"], out["hrefs"],
+                                            out["ok"])]
+                    parts.append(out.drop(columns="hrefs")
+                                 .assign(blacklisted=False))
+            if bl.any():
+                parts.append(pdf.loc[bl, _FETCH_INPUT].assign(
+                    ok=False, attempts=0, title="", text="", latency=0.0,
+                    fetch_partition=-1, blacklisted=True,
+                    links=[[]] * int(bl.sum())))
+            if parts:
+                out = pd.concat(parts, ignore_index=True)
+                out["links_found"] = out["links"].map(len)
+                yield out
+
+    return run
+
+
+def _cache_coalescing(df: DataFrame) -> DataFrame:
+    """``df.cache()``, letting AQE still coalesce the cached plan's
+    shuffle partitions as it would for an uncached frame.  Spark keeps
+    a cached plan's output partitioning by default, so a small frame
+    would keep every shuffle partition (and write one frontier file per
+    non-empty one)."""
+    conf = df.sparkSession.conf
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    old = conf.get(key)
+    conf.set(key, "true")
+    try:
+        return df.cache()
+    finally:
+        conf.set(key, old)
+
+
+def admit_per_host(cand: DataFrame, tokens: int, buckets: int) -> DataFrame:
+    """Per-host politeness admission: mark the first *tokens* rows per
+    host in canonical ``(canon_url, seed_id)`` order as admitted; the
+    rest are deferred.
 
     Two-phase top-N (VERDICT r2 #1) so no single task ever sorts a hot
     host's full candidate list:
@@ -205,8 +271,9 @@ def admit_per_host(
     top-*tokens* rows (which all survive phase 1) ahead of it in phase
     2, so rank₂ > tokens — deferred.
 
-    Returns ``(admitted, deferred)``; both drop the helper columns and
-    preserve the input columns.
+    Returns the input rows with a boolean ``admitted`` column, so one
+    frame carries both sides (the crawl caches it: the fetch reads the
+    admitted rows, the frontier write the deferred ones).
     """
     order = [F.col("canon_url"), F.col("seed_id")]
     pre = cand.withColumn(
@@ -214,17 +281,15 @@ def admit_per_host(
     )
     w_local = Window.partitionBy("host", "__asalt").orderBy(*order)
     pre = pre.withColumn("__lrn", F.row_number().over(w_local))
-    survivors = pre.filter(F.col("__lrn") <= tokens)
     w_host = Window.partitionBy("host").orderBy(*order)
-    ranked = survivors.withColumn("__tok", F.row_number().over(w_host))
-    admitted = ranked.filter(F.col("__tok") <= tokens) \
-                     .drop("__asalt", "__lrn", "__tok")
-    deferred = (
-        pre.filter(F.col("__lrn") > tokens).drop("__asalt", "__lrn")
-        .unionByName(ranked.filter(F.col("__tok") > tokens)
-                     .drop("__asalt", "__lrn", "__tok"))
+    ranked = pre.filter(F.col("__lrn") <= tokens).withColumn(
+        "admitted", F.row_number().over(w_host) <= tokens)
+    return (
+        pre.filter(F.col("__lrn") > tokens)
+        .withColumn("admitted", F.lit(False))
+        .unionByName(ranked)
+        .drop("__asalt", "__lrn")
     )
-    return admitted, deferred
 
 
 def run_crawl(
@@ -268,7 +333,8 @@ def run_crawl(
         counts = {int(k): v for k, v in manifest["counts"].items()}
         pops = {int(k): v for k, v in manifest["pops"].items()}
         n_seeds = manifest["n_seeds"]
-        frontier = store.read(spark, "frontier", manifest["round"])
+        frontier = store.read(spark, "frontier", manifest["round"],
+                              FRONTIER_SCHEMA)
         seen = store.read_deltas(spark, "seen_urls", SEEN_SCHEMA,
                                  manifest["round"])
         seen_hashes = store.read_deltas(spark, "seen_hashes", HASHES_SCHEMA,
@@ -409,14 +475,18 @@ def run_crawl(
         cand = cand.withColumn(
             "host", F.regexp_extract("canon_url", r"^https?://([^/]+)", 1)
         )
-        deferred = None
+        deferred = ranked = None
         if cfg.host_tokens_per_round is not None:
             # two-phase top-N admission: no single task sorts a hot
             # host's full candidate list (VERDICT r2 #1) — see
-            # admit_per_host for the exactness argument.
-            cand, rejected = admit_per_host(
-                cand, cfg.host_tokens_per_round, cfg.salt_buckets)
-            deferred = rejected.select(
+            # admit_per_host for the exactness argument.  Cached: the
+            # fetch reads the admitted rows and the frontier write the
+            # deferred ones, and without it the write re-ran the gate,
+            # the probe and both windows.  Unpersisted at round end.
+            ranked = _cache_coalescing(admit_per_host(
+                cand, cfg.host_tokens_per_round, cfg.salt_buckets))
+            cand = ranked.filter(F.col("admitted")).drop("admitted")
+            deferred = ranked.filter(~F.col("admitted")).select(
                 "seed_id", "canon_url", "depth", "retry_no",
                 F.lit(0).alias("not_before"),
             )
@@ -464,51 +534,28 @@ def run_crawl(
         else:
             cand = cand.withColumn("robots_blocked", F.lit(False))
 
-        # ---- fetch stage (salted repartition defuses hot hosts) -----------
-        cand = cand.withColumn(
-            "salt", F.pmod(url_hash64(F.col("canon_url")), cfg.salt_buckets)
-        ).repartition(F.col("host"), F.col("salt"))
-
+        # ---- fetch + link extraction: one Python pass (salted
+        # repartition defuses hot hosts) ------------------------------------
         blacklisted = is_blacklisted(F.col("canon_url"), cfg.blacklist) \
             | F.col("robots_blocked")
-        # gated is referenced three times below (fetch input, the
-        # blacklist re-attach join, the skipped rows) — without a
-        # persist the whole candidate pipeline (seen anti-join +
-        # politeness + robots + repartition) re-executed once per
-        # reference (round-6 audit; guide §5 caching-for-reuse).
-        # Narrow rows (URLs + flags), unpersisted at round end.
-        gated = cand.withColumn("blacklisted", blacklisted).cache()
-
-        # fetch ONLY non-blacklisted rows (crawler.py:167-171: blacklist
-        # checked before paying for the fetch) — blacklisted rows rejoin
-        # the pipeline as popped-but-skipped.
-        to_fetch = gated.filter(~F.col("blacklisted")) \
-                        .select("canon_url", "seed_id", "depth", "retry_no")
-        fetched = to_fetch.mapInPandas(fetch_stage, FETCH_SCHEMA)
-        fetched = fetched.join(
-            gated.select("seed_id", "canon_url", "blacklisted"),
-            ["seed_id", "canon_url"],
+        salt = F.pmod(url_hash64(F.col("canon_url")), cfg.salt_buckets)
+        # an explicit partition count: AQE would otherwise coalesce these
+        # URL-sized rows into a few tasks and undo the salt
+        n_fetch = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        fetched = (
+            cand.repartition(n_fetch, F.col("host"), salt)
+            .select(*_FETCH_INPUT, blacklisted.alias("blacklisted"))
+            .mapInPandas(_make_fetch_extract(fetch_stage), FETCHED_SCHEMA)
         )
-        skipped_rows = gated.filter(F.col("blacklisted")).select(
-            "canon_url", "seed_id", "depth", "retry_no",
-            F.lit(False).alias("ok"), F.lit(0).alias("attempts"),
-            F.lit("").alias("title"), F.lit("").alias("text"),
-            F.array().cast("array<string>").alias("hrefs"),
-            F.lit(0.0).alias("latency"), F.lit(-1).alias("fetch_partition"),
-            F.lit(True).alias("blacklisted"),
-        )
-        # cache the RAW fetch output: the link-extraction branch below is
-        # joined back into this frame AND re-read for next_frontier, and
-        # without the persist each reference re-ran the fetch stage from
-        # scratch (round-6 audit: the fetch UDF processed ~2x the unique
-        # rows per crawl).  Unpersisted at round end.
-        fetched = fetched.unionByName(skipped_rows).cache()
-        fetched_raw = fetched   # handle for the round-end unpersist
 
         # ---- failed-fetch re-enqueue (I3 distributed: retries are
         # frontier rows with a future not_before, not inline sleeps) ----
-        retry_delta = None
+        retry_delta = fetched_raw = None
         if cfg.max_retries > 0:
+            # the retry rows and the round's rows both read the fetch
+            # output: cache it so the fetch runs once.  Unpersisted at
+            # round end.
+            fetched = fetched_raw = fetched.cache()
             retry_cond = (~F.col("ok") & ~F.col("blacklisted")
                           & (F.col("retry_no") < cfg.max_retries))
             retry_delta = fetched.filter(retry_cond).select(
@@ -527,28 +574,6 @@ def run_crawl(
             "content_hash",
             F.when(F.col("ok"), F.sha2(F.col("text"), 256)),
         )
-
-        # ---- link extraction (X5-X7 via vectorized UDFs) -------------------
-        link_src = fetched.filter(F.col("ok") & ~F.col("blacklisted"))
-        exploded = (
-            link_src.select("seed_id", "canon_url", F.explode("hrefs").alias("href"))
-            .withColumn("href", F.trim("href"))
-            .filter(~is_junk_href(F.col("href")))                        # F3
-            .withColumn("resolved", urljoin_udf(F.col("canon_url"), F.col("href")))
-            .filter(is_valid_onion(F.col("resolved")))                   # F1
-            .withColumn("link", canonicalize_udf(F.col("resolved")))     # X1
-            .select("seed_id", F.col("canon_url").alias("parent"), "link")
-            .distinct()
-            # two consumers (link_counts + next_frontier): cache so the
-            # explode + urljoin/canonicalize Arrow passes run once
-            .cache()
-        )
-        link_counts = exploded.groupBy("seed_id", F.col("parent").alias("canon_url")) \
-                              .agg(F.count("*").alias("links_found"))
-        fetched = fetched.join(link_counts, ["seed_id", "canon_url"], "left") \
-                         .withColumn("links_found",
-                                     F.coalesce("links_found", F.lit(0))
-                                     .cast("int"))
 
         # ---- global content dedup (D1, canonical order) --------------------
         eligible = F.col("ok") & ~F.col("blacklisted")
@@ -623,12 +648,11 @@ def run_crawl(
         new_seen = seen.unionByName(seen_delta)
 
         # frontier_{d+1}: links from popped fetched rows (crawler.py:258-262)
+        # (links is empty for failed and skipped rows)
         if depth < cfg.max_depth:
-            popped_parents = popped_rows.filter(eligible) \
-                .select("seed_id", F.col("canon_url").alias("parent"))
             next_frontier = (
-                exploded.join(popped_parents, ["seed_id", "parent"])
-                .select("seed_id", F.col("link").alias("canon_url"))
+                popped_rows.select("seed_id",
+                                   F.explode("links").alias("canon_url"))
                 .distinct()
                 .join(new_seen, ["seed_id", "canon_url"], "left_anti")
                 .withColumn("depth", F.lit(depth + 1))
@@ -752,11 +776,10 @@ def run_crawl(
                     delta_keyed, "probe_key", expected_items=1,
                     params=(sketch.n_bits, sketch.k)))
             save_sketch(root, round_no, sketch, sketch_capacity)
-        fetched.unpersist()
-        fetched_raw.unpersist()
-        exploded.unpersist()
-        gated.unpersist()
-        frontier = store.read(spark, "frontier", round_no)
+        for frame in (fetched, fetched_raw, ranked):
+            if frame is not None:
+                frame.unpersist()
+        frontier = store.read(spark, "frontier", round_no, FRONTIER_SCHEMA)
         seen = store.read_deltas(spark, "seen_urls", SEEN_SCHEMA, round_no)
         seen_hashes = store.read_deltas(spark, "seen_hashes", HASHES_SCHEMA,
                                         round_no)

@@ -191,11 +191,8 @@ def crawl_round_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # admit_per_host) — the DuckDB oracle uses the plain single window,
     # so this oracle row doubles as a correctness proof that the
     # two-phase top-N admits the identical set
-    adm, deferred = admit_per_host(cand, _RG_TOKENS, buckets=8)
-    cand = (
-        adm.withColumn("admitted", F.lit(True))
-        .unionByName(deferred.withColumn("admitted", F.lit(False)))
-    ).withColumn("blacklisted", is_blacklisted(F.col("canon_url")))  # F2
+    cand = admit_per_host(cand, _RG_TOKENS, buckets=8) \
+        .withColumn("blacklisted", is_blacklisted(F.col("canon_url")))  # F2
 
     def _h(prefix: str):
         return F.conv(

@@ -137,7 +137,8 @@ def attach_grouped_prefix(
     pair runs instead — identical values, none of the checkpoint/extra-
     job machinery that only pays for itself at scale (the same
     scale-adaptive device ``attach_global_seq`` ships; the window-path
-    == prefix-path equality is pinned by tests/test_seq.py).
+    == prefix-path equality is pinned by
+    tests/test_crawl_features.py::test_grouped_prefix_matches_window).
     """
     from collections import defaultdict
 

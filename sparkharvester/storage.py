@@ -37,8 +37,12 @@ class SnapshotStore:
         df.write.mode("overwrite").parquet(path)
         return path
 
-    def read(self, spark: SparkSession, table: str, version: int) -> DataFrame:
-        return spark.read.parquet(self._path(table, version))
+    def read(self, spark: SparkSession, table: str, version: int,
+             schema: str | None = None) -> DataFrame:
+        """*schema* skips parquet schema inference, which costs a Spark
+        job per read."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(self._path(table, version))
 
     # -- append-only delta tables ---------------------------------------------
     # Accumulating tables (pages, seen, metrics) write one small delta per

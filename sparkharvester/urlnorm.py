@@ -2,12 +2,13 @@
 
 Two implementations of canonicalization:
 
-1. ``canonicalize_udf`` — vectorized pandas/Arrow UDF wrapping
-   ``urllib.parse`` for byte-exact parity with the reference
-   (extractor.py:51-70: lowercase scheme/host, drop fragment, rstrip
-   trailing slash on non-root path, drop empty query params, sort
-   remaining pairs, urlencode).  Used by the crawl engine where exact
-   RFC-3986 + quoting behaviour matters.
+1. ``canonicalize_one`` — ``urllib.parse`` for byte-exact parity with
+   the reference (extractor.py:51-70: lowercase scheme/host, drop
+   fragment, rstrip trailing slash on non-root path, drop empty query
+   params, sort remaining pairs, urlencode).  The crawl's fetch stage
+   calls it per link through ``extract_links``, where exact RFC-3986 +
+   quoting behaviour matters; ``canonicalize_udf`` is its vectorized
+   pandas/Arrow UDF for Column callers.
 
 2. ``canonicalize_expr`` / ``canonicalize_sql`` — a pure built-in
    (Catalyst-codegen / DuckDB) regex re-expression of the same rules
@@ -31,6 +32,8 @@ scale linearly, no shuffle.
 """
 from __future__ import annotations
 
+import re
+from collections.abc import Iterable
 from urllib.parse import parse_qsl, urlencode, urljoin, urlparse, urlunparse
 
 import pandas as pd
@@ -54,6 +57,27 @@ def canonicalize_one(url: str) -> str:
     query_pairs = [(k, v) for k, v in parse_qsl(parsed.query) if v]
     query = urlencode(sorted(query_pairs))
     return urlunparse((scheme, netloc, path, "", query, ""))
+
+
+_ONION_RE = re.compile(ONION_V3_PATTERN.removeprefix("(?i)"), re.IGNORECASE)
+
+
+def extract_links(base_url: str, hrefs: Iterable[str]) -> list[str]:
+    """Distinct canonical onion links of one page (extractor.py:74-93):
+    strip → junk filter (F3) → resolve + fragment strip (X2/F4) →
+    onion filter (F1) → canonicalize (X1), sorted.  The crawl's fetch
+    stage calls this per fetched page, in the same Python worker pass
+    as the fetch; ``oracle.extract_links_py`` is the reference it is
+    tested against."""
+    links: set[str] = set()
+    for href in hrefs:
+        href = href.strip()
+        if not href or href.startswith(JUNK_HREF_PREFIXES):
+            continue
+        full = urljoin(base_url, href).split("#")[0]
+        if _ONION_RE.match(full):
+            links.add(canonicalize_one(full))
+    return sorted(links)
 
 
 def _canonicalize_batch(urls: pd.Series) -> pd.Series:

@@ -206,7 +206,9 @@ def test_two_phase_admission_exact_and_bounded(spark):
         rows, "seed_id int, canon_url string, depth int, retry_no int"
     ).withColumn("host", F.lit("hotonionhost.onion")).repartition(16)
 
-    admitted, deferred = admit_per_host(df, tokens, buckets)
+    marked = admit_per_host(df, tokens, buckets)
+    admitted = marked.filter(F.col("admitted"))
+    deferred = marked.filter(~F.col("admitted"))
     w = Window.partitionBy("host").orderBy("canon_url", "seed_id")
     ref = {
         (r["seed_id"], r["canon_url"])
